@@ -731,12 +731,12 @@ def tool_dedup(argv: list[str]) -> int:
         # Arrow verify stage in particular) runs exactly once instead of
         # once for the write and again for the cluster pass
         if args.pairs_parquet:
-            result.write.mode("overwrite").parquet(args.pairs_parquet)
-            # the dedup operators return the pair frame persisted (the
-            # over-limit contract); release those blocks before dropping
-            # our handle to them, else repeated in-process main() calls
-            # leak cached partitions until GC
-            result.unpersist()
+            # the dedup operators may return the pair frame persisted
+            # (the operators.cache contract); release those blocks
+            # before dropping our handle to them, else repeated
+            # in-process main() calls leak cached partitions until GC
+            with released(result):
+                result.write.mode("overwrite").parquet(args.pairs_parquet)
             result = df.sparkSession.read.parquet(args.pairs_parquet)
         # every pair method emits (id_a, id_b, ...)
         if args.keep == "best":
@@ -1497,18 +1497,21 @@ def tool_dedupindex(argv: list[str]) -> int:
                 for t in args.corpus_table.split(",") if t.strip()
             ]
             corpus = reduce(lambda a, b: a.unionByName(b), frames)
+        from .operators.cache import released
+
         hits = minhash_index_query(
             df, args.index_path, threshold=args.threshold,
             text_col=args.text_column, id_col=args.id_column,
             drop_stats=stats, corpus=corpus,
         )
-        if args.output_parquet:
-            hits.write.mode("overwrite").parquet(args.output_parquet)
-        report = HTMLReport("dedupindex (query)")
-        report.add_dataframe_tab("Near-dup hits", hits)
-        out = args.output or _results_path("dedupindex")
-        report.save(out)
-        print(f"{hits.count()} near-dup pairs found")
+        with released(hits):
+            if args.output_parquet:
+                hits.write.mode("overwrite").parquet(args.output_parquet)
+            report = HTMLReport("dedupindex (query)")
+            report.add_dataframe_tab("Near-dup hits", hits)
+            out = args.output or _results_path("dedupindex")
+            report.save(out)
+            print(f"{hits.count()} near-dup pairs found")
         print(f"Report saved to {out}")
     if stats:
         logger.info("drop accounting: %s", stats)

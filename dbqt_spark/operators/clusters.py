@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import released
+
 
 def connected_components(
     pairs: DataFrame,
@@ -69,16 +71,14 @@ def connected_components(
     )
     ids_only = pairs.select(
         F.col(id_a).alias("__a"), F.col(id_b).alias("__b")
-    ).persist()
-    try:
+    )
+    with released(ids_only.persist()) as ids_only:
         probe = ids_only.limit(limit + 1).collect()
         if len(probe) <= limit:
             if stats is not None:
                 stats["rounds"] = 0  # driver union-find, no Spark rounds
             return _local_components(pairs, probe, id_a)
         return _distributed_components(ids_only, max_iterations, stats)
-    finally:
-        ids_only.unpersist()
 
 
 def _local_components(pairs, probe, id_a) -> DataFrame:
@@ -218,8 +218,8 @@ def near_dup_clusters(
     the canonical-min policy, now transitively correct. A persisted
     ``pairs`` input is released here once the components are built (the
     components never reference its lineage)."""
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
-    pairs.unpersist()  # no-op unless dedup returned it persisted
+    with released(pairs):
+        comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     sizes = comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
@@ -416,8 +416,8 @@ def best_quality_kept(
     max(struct) collapses it map-side. Winners (one row per cluster)
     join back keyed by cluster_id; AQE picks broadcast when the
     cluster count is small."""
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
-    pairs.unpersist()  # no-op unless dedup returned it persisted
+    with released(pairs):
+        comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     scored = comp.withColumnRenamed("id", id_col).join(
         scores.select(id_col, score_col), id_col, "left"
     )
@@ -464,8 +464,8 @@ def cluster_size_report(
     one row — no driver collect, no second corpus scan beyond the
     count. Rows with n_clusters = 0 are suppressed (an all-dup corpus
     emits no size-1 row)."""
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
-    pairs.unpersist()
+    with released(pairs):
+        comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     sizes = comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )

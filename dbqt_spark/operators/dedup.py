@@ -26,11 +26,14 @@ from __future__ import annotations
 
 import hashlib
 import re
+from contextlib import ExitStack
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .cache import localize_or_keep, released
 
 # Mersenne prime 2^31-1 for the universal-hash permutations: with a 31-bit
 # hash domain, a*h+b < 2^62 stays inside int64 (Spark ANSI mode forbids
@@ -84,15 +87,8 @@ def dedup_exact(
     groupBy + semi-join on (fingerprint, min_id) rather than a window: the
     aggregation combines map-side and avoids a full per-group sort."""
     with_fp = df.withColumn("__fp", F.md5(normalize_text(text_col)))
-    keepers = with_fp.groupBy("__fp").agg(F.min(id_col).alias("__keep"))
-    return (
-        with_fp.join(
-            keepers,
-            (with_fp["__fp"] == keepers["__fp"])
-            & (with_fp[id_col] == keepers["__keep"]),
-            "left_semi",
-        )
-    ).drop("__fp")
+    keepers = with_fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
+    return with_fp.join(keepers, ["__fp", id_col], "left_semi").drop("__fp")
 
 
 def shingles_col(text_col: str, n: int = 3) -> "F.Column":
@@ -432,13 +428,8 @@ def minhash_candidate_pairs(
     before pairing; pass ``None`` to disable, pass a ``drop_stats`` dict to
     receive n_dropped_buckets / n_dropped_rows (computed eagerly).
 
-    The banded frame is persisted for the duration of the (eager) pair
-    materialization — the size aggregate, the anti-join probe, and both
-    self-join sides consume it; unpersisted, the signature pipeline would
-    re-run up to 4x — then released. The returned pair frame is small
-    (bucket-capped): a LocalRelation when it fits the broadcast limit
-    (no cached blocks survive), else persisted — see
-    ``_eager_pairs_from_banded``.
+    The pairs materialize eagerly (``_eager_pairs_from_banded``); the
+    result follows the ``operators.cache`` contract.
     """
     banded = sigs.select(
         "id",
@@ -524,50 +515,63 @@ def _eager_pairs_from_banded(
     pair_filter: "F.Column | None" = None,
 ) -> tuple[DataFrame, int]:
     """Candidate pairs from a (id, *keys) banded frame: cap hot buckets,
-    self-join on the bucket keys, dedup across bands — MATERIALIZED
-    eagerly so the big banded frame can be released before returning.
-    Returns (pairs, n_pairs).
+    self-join on the bucket keys, dedup across bands — run eagerly
+    through ``_eager_capped`` so the big banded frame is released
+    before returning. Returns (pairs, n_pairs) under the
+    ``operators.cache`` contract with ``BROADCAST_PAIR_LIMIT`` as the
+    localize limit (ids only — 16 bytes/row, <2 MB at the limit): the
+    common path hands back driver-built pairs that downstream joins
+    broadcast without an extra exchange job. ``select_pair(a, b)``
+    builds the output columns from the two aliased join sides."""
+    return _eager_capped(
+        banded,
+        keys,
+        max_bucket_size,
+        drop_stats,
+        lambda capped: _candidate_pair_plan(
+            capped, keys, select_pair, pair_filter
+        ),
+        BROADCAST_PAIR_LIMIT,
+    )
 
-    The eager materialization is deliberate: the banded frame feeds the
-    size aggregate, the anti-join probe, and both self-join sides; holding
-    it cached across the caller's (arbitrarily late) terminal action leaks
-    O(n_docs x bands) cached blocks per invocation.
 
-    Pair sets up to ``BROADCAST_PAIR_LIMIT`` (ids only — 16 bytes/row,
-    <2 MB at the limit) are COLLECTED and rebuilt as a LocalRelation:
-    zero cached blocks survive the call, downstream joins broadcast the
-    local frame without an extra exchange job, and the whole candidate
-    phase is ONE Spark job (the r5 bench's minhash tail was the
-    sequential persist -> count -> verify-count job chain queueing behind
-    12 concurrent queries). Bigger candidate sets (pathological corpora)
-    fall back to a persisted cluster-side frame — callers release that
-    one with ``.unpersist()`` / ``operators.cache.released``.
-    ``select_pair(a, b)`` builds the output columns from the two aliased
-    join sides."""
-    banded = banded.persist()
-    capped = banded
-    if max_bucket_size is not None:
-        # fills drop_stats in the same bounded probe job (r6 ran the
-        # bucket-size aggregate twice: once inside the pair job's
-        # broadcast subtree, once as a standalone stats job)
-        capped = _cap_buckets_eager(banded, keys, max_bucket_size, drop_stats)
-    pairs_plan = _candidate_pair_plan(capped, keys, select_pair, pair_filter)
-    # persist BEFORE the probe: partitions the limit computes are cached,
-    # so the over-limit fallback's count() finishes the remainder instead
-    # of re-executing the whole self-join (ADVICE r6 — the double cost
-    # landed exactly on the pathological huge-candidate-set path)
-    pairs = pairs_plan.persist()
-    rows = pairs.limit(BROADCAST_PAIR_LIMIT + 1).collect()
-    if len(rows) > BROADCAST_PAIR_LIMIT:
-        # huge candidate set: stay cluster-side (persisted), don't pull
-        # it through the driver
-        n_pairs = pairs.count()
-        banded.unpersist()
-        return pairs, n_pairs
-    pairs.unpersist()
-    banded.unpersist()
-    local = banded.sparkSession.createDataFrame(rows, schema=pairs_plan.schema)
-    return local, len(rows)
+def _eager_capped(
+    banded: DataFrame,
+    keys: list[str],
+    max_bucket_size: int | None,
+    drop_stats: dict | None,
+    build,
+    limit: int | None,
+) -> tuple[DataFrame, int]:
+    """THE shared cap -> build -> localize path: ``build(capped)`` over
+    the bucket-capped ``banded`` frame, run once through
+    ``cache.localize_or_keep(..., limit)``.
+
+    ``banded`` feeds the bucket-size probe, the anti-join and both
+    sides of whatever ``build`` joins, so it is persisted for the call
+    and released before returning (or raising); unpersisted, the
+    banding UDF would re-run once per consumer. Drop counts land in
+    ``drop_stats`` (n_dropped_buckets / n_dropped_rows) when given."""
+    with released(banded.persist()) as banded:
+        capped = banded
+        if max_bucket_size is not None:
+            capped = _cap_buckets_eager(
+                banded, keys, max_bucket_size, drop_stats
+            )
+        return localize_or_keep(build(capped), limit)
+
+
+def _release_pairs_after(verified: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Tail of the pair-verifying tiers. Common path: ``pairs`` came
+    back uncached, so ``verified`` stays lazy. Over-limit path:
+    ``verified`` runs once through ``localize_or_keep`` while the
+    persisted ``pairs`` (consumed by both text joins) is still cached,
+    then ``pairs`` is released — the result follows the
+    ``operators.cache`` contract."""
+    if not pairs.is_cached:
+        return verified
+    with released(pairs):
+        return localize_or_keep(verified, BROADCAST_PAIR_LIMIT)[0]
 
 
 # Above this many candidate pairs the verify-side broadcasts fall back to
@@ -611,10 +615,9 @@ def minhash_near_duplicates(
     The candidate phase runs eagerly (one job; drop stats on request);
     no intermediate cache outlives the call. On the common path the
     candidate set localizes (``_eager_pairs_from_banded``) and the
-    returned verification frame is LAZY with zero cached blocks; only
-    when the candidate set exceeds ``BROADCAST_PAIR_LIMIT`` does the
-    result come back persisted — release that with ``.unpersist()`` or
-    ``operators.cache.released``."""
+    returned verification frame is LAZY with zero cached blocks; an
+    over-limit candidate set makes the result follow the
+    ``operators.cache`` contract."""
     banded = _spread(df).select(
         F.col(id_col).alias("id"),
         F.posexplode(
@@ -640,15 +643,7 @@ def minhash_near_duplicates(
     verified = _attach_texts_and_verify(
         pairs, n_pairs, docs, docs, "id_a", "id_b", shingle_n, threshold
     )
-    if pairs.is_cached:
-        # fallback path (candidate set too big to localize): materialize
-        # the verified set so the candidate-pair cache — consumed by BOTH
-        # text joins above — can be released here; the returned frame is
-        # persisted and the caller releases it (VERDICT r5 ask #8)
-        verified = verified.persist()
-        verified.count()
-        pairs.unpersist()
-    return verified
+    return _release_pairs_after(verified, pairs)
 
 
 def _attach_texts_and_verify(
@@ -827,10 +822,8 @@ def simhash_near_duplicates(
     the ``portable=True`` + DuckDB-oracle pairing verifies. ``drop_stats``
     receives n_dropped_buckets / n_dropped_rows when the cap fires.
 
-    Eagerly materialized with intermediates released: the returned pair
-    frame is a LocalRelation on the common path (nothing cached), or a
-    persisted frame when the candidate set exceeds the broadcast limit —
-    release that with ``.unpersist()`` / ``operators.cache.released``."""
+    Eagerly materialized with intermediates released; the result
+    follows the ``operators.cache`` contract."""
     if max_hamming >= bands:
         raise ValueError(
             f"pigeonhole banding needs max_hamming < bands "
@@ -919,10 +912,8 @@ def ngram_jaccard_near_duplicates(
     exactness matters and run exact dedup first so identical docs don't
     concentrate.
 
-    Eager like the other near-dup ops: pair sets within
-    ``BROADCAST_PAIR_LIMIT`` localize (zero cached blocks survive),
-    bigger ones come back persisted (release via ``.unpersist()`` /
-    ``operators.cache.released``)."""
+    Eager like the other near-dup ops: the result follows the
+    ``operators.cache`` contract (limit ``BROADCAST_PAIR_LIMIT``)."""
     # r16 examined, REJECTED: pre-clustering the posting list on
     # `shingle` before the distinct (so the cached frame would feed
     # both self-join sides exchange-free) does NOT work — an
@@ -935,67 +926,63 @@ def ngram_jaccard_near_duplicates(
         .select("id", "shingle")
         .distinct()
     )
-    sh = sh.persist()
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
+    with released(sh.persist()) as sh:
+        if max_shingle_df is not None:
+            hot = (
+                sh.groupBy("shingle")
+                .agg(F.count(F.lit(1)).alias("__df"))
+                .filter(F.col("__df") > max_shingle_df)
+            )
+            if drop_stats is not None:
+                row = hot.agg(
+                    F.count(F.lit(1)).alias("s"),
+                    F.coalesce(F.sum("__df"), F.lit(0)).alias("p"),
+                ).collect()[0]
+                drop_stats["n_dropped_shingles"] = int(row["s"])
+                drop_stats["n_dropped_postings"] = int(row["p"])
+            sh_kept = sh.join(
+                F.broadcast(hot.select("shingle")), "shingle", "left_anti"
+            )
+        else:
+            sh_kept = sh
+        # set sizes AFTER the df-cap so the Jaccard denominator matches
+        # the (possibly reduced) similarity domain
+        sizes = sh_kept.groupBy("id").agg(F.count(F.lit(1)).alias("__sz"))
+        a, b = sh_kept.alias("a"), sh_kept.alias("b")
+        shared = (
+            a.join(
+                b,
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .groupBy(
+                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+            )
+            .agg(F.count(F.lit(1)).alias("__shared"))
         )
-        if drop_stats is not None:
-            row = hot.agg(
-                F.count(F.lit(1)).alias("s"),
-                F.coalesce(F.sum("__df"), F.lit(0)).alias("p"),
-            ).collect()[0]
-            drop_stats["n_dropped_shingles"] = int(row["s"])
-            drop_stats["n_dropped_postings"] = int(row["p"])
-        sh_kept = sh.join(
-            F.broadcast(hot.select("shingle")), "shingle", "left_anti"
+        jac = F.col("__shared") / (
+            F.col("__sa") + F.col("__sb") - F.col("__shared")
         )
-    else:
-        sh_kept = sh
-    # set sizes AFTER the df-cap so the Jaccard denominator matches the
-    # (possibly reduced) similarity domain
-    sizes = sh_kept.groupBy("id").agg(F.count(F.lit(1)).alias("__sz"))
-    a, b = sh_kept.alias("a"), sh_kept.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
+        pairs_plan = (
+            shared.join(
+                sizes.select(
+                    F.col("id").alias("id_a"), F.col("__sz").alias("__sa")
+                ),
+                "id_a",
+            )
+            .join(
+                sizes.select(
+                    F.col("id").alias("id_b"), F.col("__sz").alias("__sb")
+                ),
+                "id_b",
+            )
+            # threshold on the UNROUNDED ratio (one IEEE division of two
+            # exact ints — engines agree bit-for-bit); round only for
+            # display
+            .filter(jac >= threshold)
+            .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("__shared"))
-    )
-    jac = F.col("__shared") / (
-        F.col("__sa") + F.col("__sb") - F.col("__shared")
-    )
-    pairs_plan = (
-        shared.join(
-            sizes.select(
-                F.col("id").alias("id_a"), F.col("__sz").alias("__sa")
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.select(
-                F.col("id").alias("id_b"), F.col("__sz").alias("__sb")
-            ),
-            "id_b",
-        )
-        # threshold on the UNROUNDED ratio (one IEEE division of two exact
-        # ints — engines agree bit-for-bit); round only for display
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
-    rows = pairs_plan.limit(BROADCAST_PAIR_LIMIT + 1).collect()
-    if len(rows) > BROADCAST_PAIR_LIMIT:
-        pairs = pairs_plan.persist()
-        pairs.count()
-        sh.unpersist()
-        return pairs
-    sh.unpersist()
-    return sh.sparkSession.createDataFrame(rows, schema=pairs_plan.schema)
+        return localize_or_keep(pairs_plan, BROADCAST_PAIR_LIMIT)[0]
 
 
 def minhash_cross_near_duplicates(
@@ -1025,10 +1012,12 @@ def minhash_cross_near_duplicates(
     side — and candidates verify with exact Jaccard over the shingle
     sets. The bucket cap applies per side (a hot boilerplate bucket is
     quadratic in the CROSS product too), with drops observable via
-    ``drop_stats`` ({'query': {...}, 'corpus': {...}}).
+    ``drop_stats`` ({'query': {...}, 'corpus': {...}}). Every band and
+    candidate cache is released before returning; the result follows
+    the ``operators.cache`` contract (limit ``BROADCAST_PAIR_LIMIT``).
     """
 
-    to_release: "list[DataFrame]" = []
+    held = ExitStack()
 
     def banded(df: DataFrame, side: str) -> DataFrame:
         frame = _spread(df).select(
@@ -1039,8 +1028,7 @@ def minhash_cross_near_duplicates(
         )
         if max_bucket_size is not None:
             stats: dict = {}
-            frame = frame.persist()
-            to_release.append(frame)
+            frame = held.enter_context(released(frame.persist()))
             frame = _cap_buckets_eager(
                 frame, ["band_id", "band_hash"], max_bucket_size, stats
             )
@@ -1048,36 +1036,32 @@ def minhash_cross_near_duplicates(
                 drop_stats[side] = stats
         return frame
 
-    q_bands = banded(query_df, "query")
-    c_bands = banded(corpus_df, "corpus")
-    cands = (
-        q_bands.join(c_bands, ["band_id", "band_hash"])
-        .select("query_id", "corpus_id")
-        .distinct()
-    )
-    n_cand = cands.persist().count()
-    verified = _attach_texts_and_verify(
-        cands,
-        n_cand,
-        query_df.select(
-            F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-        ),
-        corpus_df.select(
-            F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-        ),
-        "query_id",
-        "corpus_id",
-        shingle_n,
-        threshold,
-    )
-    # eager checkpoint: materializes the verified pairs so every cached
-    # band/candidate frame can be released before returning (the result
-    # carries no lineage back to them)
-    result = verified.localCheckpoint()
-    cands.unpersist()
-    for frame in to_release:
-        frame.unpersist()
-    return result
+    with held:
+        q_bands = banded(query_df, "query")
+        c_bands = banded(corpus_df, "corpus")
+        cands = (
+            q_bands.join(c_bands, ["band_id", "band_hash"])
+            .select("query_id", "corpus_id")
+            .distinct()
+        )
+        cands = held.enter_context(released(cands.persist()))
+        verified = _attach_texts_and_verify(
+            cands,
+            cands.count(),
+            query_df.select(
+                F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
+            ),
+            corpus_df.select(
+                F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
+            ),
+            "query_id",
+            "corpus_id",
+            shingle_n,
+            threshold,
+        )
+        # the verified pairs run once while the band/candidate caches
+        # are still held; every one of them is released on the way out
+        return localize_or_keep(verified, BROADCAST_PAIR_LIMIT)[0]
 
 
 def _deletion_neighborhood_expr(col: str, d: int) -> "F.Column":
@@ -1145,7 +1129,8 @@ def edit_distance_near_duplicates(
     ``max_len`` are excluded from pairing (edit distance on documents
     is the wrong tool — near-dup docs belong to MinHash) and counted
     in ``drop_stats['n_too_long']`` so the exclusion is observable.
-    NULL strings pair as empty strings."""
+    NULL strings pair as empty strings. The result follows the
+    ``operators.cache`` contract."""
     if not 1 <= max_distance <= 2:
         raise ValueError(
             f"max_distance must be 1 or 2, got {max_distance} — beyond "
@@ -1204,11 +1189,7 @@ def edit_distance_near_duplicates(
             "id_a", "id_b", F.col("distance").cast("int").alias("distance")
         )
     )
-    if pairs.is_cached:
-        verified = verified.persist()
-        verified.count()
-        pairs.unpersist()
-    return verified
+    return _release_pairs_after(verified, pairs)
 
 
 def corpus_overlap(

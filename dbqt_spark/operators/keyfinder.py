@@ -20,11 +20,14 @@ the row count before any exact check — a Spark-native improvement
 from __future__ import annotations
 
 import logging
+from contextlib import nullcontext
 from itertools import combinations
 from math import comb
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .cache import released
 
 logger = logging.getLogger(__name__)
 
@@ -134,9 +137,7 @@ def find_composite_keys(
     except Exception:
         pass  # partition probing (df.rdd) can fail on exotic frames;
         # the spread is an optimization, never a correctness requirement
-    if cache:
-        df = df.cache()
-    try:
+    with (released(df.cache()) if cache else nullcontext(df)) as df:
         found: list[tuple[str, ...]] = []
         null_reject: set[frozenset[str]] = set()
         for size in range(1, max_size + 1):
@@ -179,6 +180,3 @@ def find_composite_keys(
             if found:
                 break  # minimal keys only (keyfinder.py:179-182)
         return found
-    finally:
-        if cache:
-            df.unpersist()

@@ -63,11 +63,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import localize_or_keep, released
 from .dedup import (
+    BROADCAST_PAIR_LIMIT,
     _attach_texts_and_verify,
     _cap_buckets,
     _cap_buckets_eager,
@@ -105,6 +108,30 @@ def _band_key_rows(
             minhash_band_hashes(text_col, num_hashes, bands, shingle_n)
         ).alias("band_id", "band_hash"),
     ).select(out_id, F.xxhash64("band_id", "band_hash").alias("band_key"))
+
+
+@contextmanager
+def _capped_bands(
+    banded: DataFrame, max_bucket_size: int | None, drop_stats: dict | None
+):
+    """Yield ``banded`` with oversized band_key buckets dropped, the
+    banded rows persisted for the scope (the cap's size aggregate and
+    the consumer both read them). Drop accounting requested -> eager
+    cap (separate probe job, stats + LocalRelation anti-join).
+    Otherwise the cap stays LAZY: its size aggregate rides the
+    consumer's job as a broadcast subtree over the persisted bands — no
+    separate probe job (r16; the eager probe cost a 4-job executeTake
+    ramp per lifecycle step)."""
+    if max_bucket_size is None:
+        yield banded
+        return
+    with released(banded.persist()) as banded:
+        if drop_stats is not None:
+            yield _cap_buckets_eager(
+                banded, ["band_key"], max_bucket_size, drop_stats
+            )
+        else:
+            yield _cap_buckets(banded, ["band_key"], max_bucket_size)
 
 
 def _load_meta(path: str) -> dict:
@@ -189,26 +216,9 @@ def minhash_index_write(
     banded = _band_key_rows(
         df, "corpus_id", text_col, id_col, num_hashes, bands, shingle_n
     )
-    if max_bucket_size is not None:
-        # drop accounting requested -> eager cap (separate probe job,
-        # stats + LocalRelation anti-join). Otherwise the cap stays
-        # LAZY: its size aggregate rides the write job as a broadcast
-        # subtree over the persisted bands — no separate probe job
-        # (r16; the eager probe cost a 4-job executeTake ramp per
-        # lifecycle step).
-        banded = banded.persist()
-        if drop_stats is not None:
-            capped = _cap_buckets_eager(
-                banded, ["band_key"], max_bucket_size, drop_stats
-            )
-        else:
-            capped = _cap_buckets(banded, ["band_key"], max_bucket_size)
-    else:
-        capped = banded
     os.makedirs(path, exist_ok=True)
-    capped.write.mode("overwrite").parquet(band_path)
-    if max_bucket_size is not None:
-        banded.unpersist()
+    with _capped_bands(banded, max_bucket_size, drop_stats) as capped:
+        capped.write.mode("overwrite").parquet(band_path)
     # COMMIT POINT: the manifest write publishes the new generation. A
     # crash before this line leaves the previous manifest (if any)
     # pointing at its own complete generation — never new-parameter
@@ -262,20 +272,10 @@ def minhash_index_append(
         int(meta["shingle_n"]),
     )
     cap = meta.get("max_bucket_size")
-    if cap is not None:
-        # same lazy/eager split as minhash_index_write (r16)
-        banded = banded.persist()
-        if drop_stats is not None:
-            capped = _cap_buckets_eager(
-                banded, ["band_key"], int(cap), drop_stats
-            )
-        else:
-            capped = _cap_buckets(banded, ["band_key"], int(cap))
-    else:
-        capped = banded
-    capped.write.mode("append").parquet(band_path)
-    if cap is not None:
-        banded.unpersist()
+    with _capped_bands(
+        banded, None if cap is None else int(cap), drop_stats
+    ) as capped:
+        capped.write.mode("append").parquet(band_path)
 
 
 def minhash_index_delete(spark: SparkSession, path: str, ids) -> None:
@@ -408,8 +408,8 @@ def minhash_index_query(
     ``minhash_cross_near_duplicates`` over live frames is usually the
     better tool).
 
-    The result is localCheckpoint-ed (no lineage back to the probe
-    caches, which are released before returning)."""
+    The probe caches are released before returning; the result follows
+    the ``operators.cache`` contract (limit ``BROADCAST_PAIR_LIMIT``)."""
     meta = _load_meta(path)
     band_path = _bands_dir(path, int(meta["generation"]))
     spark = query_df.sparkSession
@@ -431,65 +431,54 @@ def minhash_index_query(
         int(meta["bands"]),
         int(meta["shingle_n"]),
     )
-    if max_bucket_size is not None:
-        q_bands = q_bands.persist()
-        if drop_stats is not None:
-            stats: dict = {}
-            q_capped = _cap_buckets_eager(
-                q_bands, ["band_key"], max_bucket_size, stats
-            )
-            drop_stats["query"] = stats
+    with ExitStack() as held:
+        q_stats = None if drop_stats is None else {}
+        q_capped = held.enter_context(
+            _capped_bands(q_bands, max_bucket_size, q_stats)
+        )
+        if q_stats is not None and max_bucket_size is not None:
+            drop_stats["query"] = q_stats
             # stored-side drops happened at write/append time; surface
             # the cap so callers know the symmetric guard was applied
             drop_stats["index"] = {
                 "max_bucket_size": meta.get("max_bucket_size")
             }
-        else:
-            # no drop accounting requested -> lazy cap: the size
-            # aggregate rides the candidate-count job as a broadcast
-            # subtree over the persisted query bands (r16)
-            q_capped = _cap_buckets(q_bands, ["band_key"], max_bucket_size)
-    else:
-        q_capped = q_bands
-    # tombstoned corpus ids never become candidates (deleted docs are
-    # invisible the moment the delete commits, pre-compaction)
-    store_bands = _without_deleted(
-        spark, path, meta, spark.read.parquet(band_path), "corpus_id"
-    )
-    q_side = F.broadcast(q_capped) if broadcast_query else q_capped
-    cands = (
-        q_side.join(store_bands, "band_key")
-        .select("query_id", "corpus_id")
-        .distinct()
-        .persist()
-    )
-    n_cand = cands.count()
-    corpus_docs = corpus.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    if drop_stats is not None and n_cand > 0:
-        # stale-pointer guard: candidates whose text the corpus pointer
-        # can no longer supply (left anti join moves only candidate ids)
-        drop_stats["verify_missing"] = (
-            cands.select(F.col("corpus_id").alias("__id"))
-            .distinct()
-            .join(corpus_docs.select("__id"), "__id", "left_anti")
-            .count()
+        # tombstoned corpus ids never become candidates (deleted docs
+        # are invisible the moment the delete commits, pre-compaction)
+        store_bands = _without_deleted(
+            spark, path, meta, spark.read.parquet(band_path), "corpus_id"
         )
-    verified = _attach_texts_and_verify(
-        cands,
-        n_cand,
-        query_df.select(
+        q_side = F.broadcast(q_capped) if broadcast_query else q_capped
+        cands = (
+            q_side.join(store_bands, "band_key")
+            .select("query_id", "corpus_id")
+            .distinct()
+        )
+        cands = held.enter_context(released(cands.persist()))
+        n_cand = cands.count()
+        corpus_docs = corpus.select(
             F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-        ),
-        corpus_docs,
-        "query_id",
-        "corpus_id",
-        int(meta["shingle_n"]),
-        threshold,
-    )
-    result = verified.localCheckpoint()
-    cands.unpersist()
-    if max_bucket_size is not None:
-        q_bands.unpersist()
-    return result
+        )
+        if drop_stats is not None and n_cand > 0:
+            # stale-pointer guard: candidates whose text the corpus
+            # pointer can no longer supply (left anti join moves only
+            # candidate ids)
+            drop_stats["verify_missing"] = (
+                cands.select(F.col("corpus_id").alias("__id"))
+                .distinct()
+                .join(corpus_docs.select("__id"), "__id", "left_anti")
+                .count()
+            )
+        verified = _attach_texts_and_verify(
+            cands,
+            n_cand,
+            query_df.select(
+                F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
+            ),
+            corpus_docs,
+            "query_id",
+            "corpus_id",
+            int(meta["shingle_n"]),
+            threshold,
+        )
+        return localize_or_keep(verified, BROADCAST_PAIR_LIMIT)[0]

@@ -27,10 +27,13 @@ which is what makes 100 TB curation re-runnable and auditable.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .cache import released
 
 
 @dataclass
@@ -207,8 +210,8 @@ def curate(df: DataFrame, config: CurateConfig | None = None) -> DataFrame:
             id_col=cfg.id_col,
             threshold=cfg.minhash_threshold,
         )
-        comp = connected_components(pairs)
-        pairs.unpersist()  # no-op unless dedup returned it persisted
+        with released(pairs):
+            comp = connected_components(pairs)
         drop = comp.filter(F.col("id") != F.col("cluster_id")).select(
             F.col("id").alias(cfg.id_col)
         )
@@ -294,88 +297,86 @@ def curate_report(
         raise ValueError(f"unknown dedup mode {cfg.dedup!r}")
 
     report: "dict[str, int]" = {"n_input": df.count()}
-    to_release = []
-
-    gated = quality_quantile_filter(
-        df,
-        quantile=cfg.quality_quantile,
-        group_col=cfg.group_col,
-        text_col=cfg.text_col,
-        id_col=cfg.id_col,
-        keep_all=True,
-    ).persist()
-    to_release.append(gated)
-    report["n_after_quality"] = gated.count()
-    report["n_dropped_quality"] = (
-        report["n_input"] - report["n_after_quality"]
-    )
-
-    kept = gated
-    if cfg.dedup == "exact":
-        kept = dedup_exact(
-            gated, text_col=cfg.text_col, id_col=cfg.id_col
-        ).persist()
-    elif cfg.dedup == "minhash":
-        from .clusters import connected_components
-
-        pairs = minhash_near_duplicates(
-            gated,
+    with ExitStack() as held:
+        gated = quality_quantile_filter(
+            df,
+            quantile=cfg.quality_quantile,
+            group_col=cfg.group_col,
             text_col=cfg.text_col,
             id_col=cfg.id_col,
-            threshold=cfg.minhash_threshold,
+            keep_all=True,
         )
-        comp = connected_components(pairs)
-        pairs.unpersist()
-        drop = comp.filter(F.col("id") != F.col("cluster_id")).select(
-            F.col("id").alias(cfg.id_col)
+        gated = held.enter_context(released(gated.persist()))
+        report["n_after_quality"] = gated.count()
+        report["n_dropped_quality"] = (
+            report["n_input"] - report["n_after_quality"]
         )
-        kept = gated.join(drop, cfg.id_col, "left_anti").persist()
-    if kept is not gated:
-        to_release.append(kept)
-    report["n_after_dedup"] = kept.count()
-    report["n_dropped_dedup"] = (
-        report["n_after_quality"] - report["n_after_dedup"]
-    )
 
-    final = kept
-    if cfg.eval_df is not None:
-        final = decontaminate(
-            kept,
-            cfg.eval_df,
-            n=cfg.decontam_n,
-            text_col=cfg.text_col,
-            id_col=cfg.id_col,
-        )
-        report["n_after_decontam"] = final.count()
-        report["n_dropped_decontam"] = (
-            report["n_after_dedup"] - report["n_after_decontam"]
-        )
-        report["n_output"] = report["n_after_decontam"]
-    else:
-        report["n_output"] = report["n_after_dedup"]
+        kept = gated
+        if cfg.dedup == "exact":
+            kept = dedup_exact(gated, text_col=cfg.text_col, id_col=cfg.id_col)
+            kept = held.enter_context(released(kept.persist()))
+        elif cfg.dedup == "minhash":
+            from .clusters import connected_components
 
-    if out_dir is not None:
-        from .redact import redact_pii
-        from .sampling import hash_split
-
-        out = final
-        if cfg.redact:
-            out = redact_pii(out, text_col=cfg.text_col, id_col=cfg.id_col)
-        out = hash_split(
-            out, id_col=cfg.id_col, weights=cfg.split_weights, seed=cfg.seed
+            pairs = minhash_near_duplicates(
+                gated,
+                text_col=cfg.text_col,
+                id_col=cfg.id_col,
+                threshold=cfg.minhash_threshold,
+            )
+            with released(pairs):
+                comp = connected_components(pairs)
+            drop = comp.filter(F.col("id") != F.col("cluster_id")).select(
+                F.col("id").alias(cfg.id_col)
+            )
+            kept = gated.join(drop, cfg.id_col, "left_anti")
+            kept = held.enter_context(released(kept.persist()))
+        report["n_after_dedup"] = kept.count()
+        report["n_dropped_dedup"] = (
+            report["n_after_quality"] - report["n_after_dedup"]
         )
-        out.write.mode("overwrite").partitionBy("split").parquet(out_dir)
-        written = (
-            df.sparkSession.read.parquet(out_dir)
-            .groupBy("split")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        for r in written:
-            report[f"split_{r['split']}"] = r["n"]
 
-    for frame in to_release:
-        frame.unpersist()
+        final = kept
+        if cfg.eval_df is not None:
+            final = decontaminate(
+                kept,
+                cfg.eval_df,
+                n=cfg.decontam_n,
+                text_col=cfg.text_col,
+                id_col=cfg.id_col,
+            )
+            report["n_after_decontam"] = final.count()
+            report["n_dropped_decontam"] = (
+                report["n_after_dedup"] - report["n_after_decontam"]
+            )
+            report["n_output"] = report["n_after_decontam"]
+        else:
+            report["n_output"] = report["n_after_dedup"]
+
+        if out_dir is not None:
+            from .redact import redact_pii
+            from .sampling import hash_split
+
+            out = final
+            if cfg.redact:
+                out = redact_pii(out, text_col=cfg.text_col, id_col=cfg.id_col)
+            out = hash_split(
+                out,
+                id_col=cfg.id_col,
+                weights=cfg.split_weights,
+                seed=cfg.seed,
+            )
+            out.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+            written = (
+                df.sparkSession.read.parquet(out_dir)
+                .groupBy("split")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            for r in written:
+                report[f"split_{r['split']}"] = r["n"]
+
     return report
 
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import released
+
 LOW_DISTINCT_THRESHOLD = 5  # reference: dbqt/tools/nullcheck.py:95-97
 
 # Plan-size guard for the wide one-row aggregates: Catalyst's analysis/
@@ -1015,94 +1017,91 @@ def scalable_percentiles(
     base = (
         df.select(v.alias("__v"))
         .filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-        .persist()
     )
-    row = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("__v").alias("lo"),
-        F.max("__v").alias("hi"),
-    ).collect()[0]
-    n, glo, ghi = row["n"], row["lo"], row["hi"]
-    if n == 0:
-        base.unpersist()
-        return spark.createDataFrame(
-            [(float(q), None) for q in qs], "q double, value double"
-        )
-    # the integer ranks every quantile interpolates between
-    needed: set = set()
-    for q in qs:
-        r = (n - 1) * q
-        needed.add(int(r))
-        needed.add(min(int(r) + 1, n - 1))
-    # rank -> (lo, hi, rank_within_range); start: all ranks in the full
-    # closed range with global rank
-    cells = {k: (glo, ghi, k) for k in sorted(needed)}
-    resolved: dict = {}
-    rounds = 0
-    collected = 0
-    while cells and rounds < max_rounds:
-        # group ranks by their contested range — one pass per range
-        by_range: dict = {}
-        for k, (lo, hi, kk) in cells.items():
-            by_range.setdefault((lo, hi), []).append((k, kk))
-        next_cells: dict = {}
-        for (lo, hi), ranks in by_range.items():
-            cell = base.filter(
-                (F.col("__v") >= lo) & (F.col("__v") <= hi)
+    with released(base.persist()):
+        row = base.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("__v").alias("lo"),
+            F.max("__v").alias("hi"),
+        ).collect()[0]
+        n, glo, ghi = row["n"], row["lo"], row["hi"]
+        if n == 0:
+            return spark.createDataFrame(
+                [(float(q), None) for q in qs], "q double, value double"
             )
-            if lo == hi:
-                for k, _ in ranks:
-                    resolved[k] = lo
-                continue
-            # ONE pass per contested range per round: the histogram's
-            # bucket sums double as the cell count, so the
-            # small-enough-to-collect decision costs no extra job
-            width = max((hi - lo) / 4096.0, 4.9e-324)
-            bucket = F.least(
-                F.lit(4095),
-                F.greatest(
-                    F.lit(0), F.floor((F.col("__v") - lo) / width)
-                ),
-            ).cast("int")
-            hist = {
-                r["__b"]: r
-                for r in cell.groupBy(bucket.alias("__b"))
-                .agg(
-                    F.count(F.lit(1)).alias("bn"),
-                    F.min("__v").alias("bmin"),
-                    F.max("__v").alias("bmax"),
+        # the integer ranks every quantile interpolates between
+        needed: set = set()
+        for q in qs:
+            r = (n - 1) * q
+            needed.add(int(r))
+            needed.add(min(int(r) + 1, n - 1))
+        # rank -> (lo, hi, rank_within_range); start: all ranks in the full
+        # closed range with global rank
+        cells = {k: (glo, ghi, k) for k in sorted(needed)}
+        resolved: dict = {}
+        rounds = 0
+        collected = 0
+        while cells and rounds < max_rounds:
+            # group ranks by their contested range — one pass per range
+            by_range: dict = {}
+            for k, (lo, hi, kk) in cells.items():
+                by_range.setdefault((lo, hi), []).append((k, kk))
+            next_cells: dict = {}
+            for (lo, hi), ranks in by_range.items():
+                cell = base.filter(
+                    (F.col("__v") >= lo) & (F.col("__v") <= hi)
                 )
-                .collect()
-            }
-            if sum(r["bn"] for r in hist.values()) <= max_collect:
-                vals = sorted(r["__v"] for r in cell.collect())
-                collected += len(vals)
+                if lo == hi:
+                    for k, _ in ranks:
+                        resolved[k] = lo
+                    continue
+                # ONE pass per contested range per round: the histogram's
+                # bucket sums double as the cell count, so the
+                # small-enough-to-collect decision costs no extra job
+                width = max((hi - lo) / 4096.0, 4.9e-324)
+                bucket = F.least(
+                    F.lit(4095),
+                    F.greatest(
+                        F.lit(0), F.floor((F.col("__v") - lo) / width)
+                    ),
+                ).cast("int")
+                hist = {
+                    r["__b"]: r
+                    for r in cell.groupBy(bucket.alias("__b"))
+                    .agg(
+                        F.count(F.lit(1)).alias("bn"),
+                        F.min("__v").alias("bmin"),
+                        F.max("__v").alias("bmax"),
+                    )
+                    .collect()
+                }
+                if sum(r["bn"] for r in hist.values()) <= max_collect:
+                    vals = sorted(r["__v"] for r in cell.collect())
+                    collected += len(vals)
+                    for k, kk in ranks:
+                        resolved[k] = vals[kk]
+                    continue
+                order = sorted(hist)
                 for k, kk in ranks:
-                    resolved[k] = vals[kk]
-                continue
-            order = sorted(hist)
-            for k, kk in ranks:
-                before = 0
-                for b in order:
-                    bn = hist[b]["bn"]
-                    if before + bn > kk:
-                        next_cells[k] = (
-                            hist[b]["bmin"],
-                            hist[b]["bmax"],
-                            kk - before,
-                        )
-                        break
-                    before += bn
-        cells = next_cells
-        rounds += 1
-    if cells:
-        base.unpersist()
-        raise RuntimeError(
-            f"scalable_percentiles did not converge in {max_rounds} "
-            "rounds — pathological value distribution; raise "
-            "max_rounds or max_collect"
-        )
-    base.unpersist()
+                    before = 0
+                    for b in order:
+                        bn = hist[b]["bn"]
+                        if before + bn > kk:
+                            next_cells[k] = (
+                                hist[b]["bmin"],
+                                hist[b]["bmax"],
+                                kk - before,
+                            )
+                            break
+                        before += bn
+            cells = next_cells
+            rounds += 1
+        if cells:
+            raise RuntimeError(
+                f"scalable_percentiles did not converge in {max_rounds} "
+                "rounds — pathological value distribution; raise "
+                "max_rounds or max_collect"
+            )
     if stats is not None:
         stats["rounds"] = rounds
         stats["collected_rows"] = collected
@@ -1225,9 +1224,8 @@ def scalable_group_percentiles(
     base = (
         df.select(F.col(group_col).alias("__g"), v.alias("__v"))
         .filter(F.col("__v").isNotNull() & ~F.isnan("__v"))
-        .persist()
     )
-    try:
+    with released(base.persist()):
         bounds = base.groupBy("__g").agg(
             F.count(F.lit(1)).alias("n"),
             F.min("__v").alias("lo"),
@@ -1370,8 +1368,6 @@ def scalable_group_percentiles(
                 f"{max_rounds} rounds — pathological value "
                 "distribution; raise max_rounds or max_collect"
             )
-    finally:
-        base.unpersist()
     if stats is not None:
         stats["rounds"] = rounds
         stats["collected_rows"] = collected

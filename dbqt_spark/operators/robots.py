@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .cache import released
+
 # rules_mode="auto" broadcasts the per-host rule frame while it has at
 # most this many hosts (~a few rules x ~100 B each => low tens of MB —
 # comfortably inside executor broadcast budgets); above it, auto
@@ -473,13 +475,10 @@ def robots_filter(
             # otherwise run the corpus-wide distinct-host scan +
             # semi-join twice on the accepted path — persist the
             # survivor frame across the probe, release it after
-            surv = surv.persist()
-            try:
+            with released(surv.persist()) as surv:
                 probe = _collect_if_small(
                     surv, broadcast_host_limit, broadcast_byte_limit
                 )
-            finally:
-                surv.unpersist()
             if probe is not None:
                 per_host = spark.createDataFrame(probe, per_host.schema)
             else:

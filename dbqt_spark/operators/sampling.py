@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cache import released
+
 HASH_BUCKETS = 10_000
 
 
@@ -452,189 +454,188 @@ def topk_per_group(
         # ascending __kd == score DESC (top-k) or ASC (bottom-k)
         .withColumn("__kd", -score_d if descending else score_d)
         .withColumn("__kh", portable_token_hash(hkey))
-        .persist()
     )
-
-    # cells: the contested lex interval per group, CLOSED on both ends,
-    # with its row count and remaining quota. Round 0 = actual bounds.
-    cells = (
-        base.groupBy("__g")
-        .agg(
-            F.min("__kd").alias("lo_d"),
-            F.max("__kd").alias("hi_d"),
-            F.min("__kh").alias("lo_h"),
-            F.max("__kh").alias("hi_h"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("quota", F.lit(int(k)).cast("long"))
-        .localCheckpoint()
-    )
-
-    def lex_within(lo_d, lo_h, hi_d, hi_h):
-        """(kd, kh) inside the CLOSED interval [(lo_d,lo_h),(hi_d,hi_h)]."""
-        ge = (F.col("__kd") > F.col(lo_d)) | (
-            (F.col("__kd") == F.col(lo_d)) & (F.col("__kh") >= F.col(lo_h))
-        )
-        le = (F.col("__kd") < F.col(hi_d)) | (
-            (F.col("__kd") == F.col(hi_d)) & (F.col("__kh") <= F.col(hi_h))
-        )
-        return ge & le
-
-    kept_descs = []  # closed-lo / OPEN-hi fully-kept intervals
-    final_cells = []
-    rounds = 0
-    while True:
-        # groups whose whole contested cell fits the quota: keep it all
-        kept_descs.append(
-            cells.filter(F.col("n") <= F.col("quota")).select(
-                "__g",
-                "lo_d",
-                "lo_h",
-                F.col("hi_d").alias("ho_d"),
-                (F.col("hi_h") + 1).alias("ho_h"),  # open hi past the max
+    with released(base.persist()):
+        # cells: the contested lex interval per group, CLOSED on both ends,
+        # with its row count and remaining quota. Round 0 = actual bounds.
+        cells = (
+            base.groupBy("__g")
+            .agg(
+                F.min("__kd").alias("lo_d"),
+                F.max("__kd").alias("hi_d"),
+                F.min("__kh").alias("lo_h"),
+                F.max("__kh").alias("hi_h"),
+                F.count(F.lit(1)).alias("n"),
             )
-        )
-        contested = cells.filter(F.col("n") > F.col("quota"))
-        degenerate = (F.col("lo_d") == F.col("hi_d")) & (
-            F.col("lo_h") == F.col("hi_h")
-        )
-        finish = (
-            (F.col("n") <= F.lit(int(max_window_rows)))
-            | degenerate
-            | F.lit(rounds >= max_rounds)
-        )
-        final_cells.append(contested.filter(finish))
-        active = contested.filter(~finish)
-        if active.isEmpty():
-            break
-        rounds += 1
-        cand = base.join(_bc(active), "__g").filter(
-            lex_within("lo_d", "lo_h", "hi_d", "hi_h")
-        )
-        # split on the score while it has spread, else on the hash;
-        # floor width at the smallest positive double so an
-        # ulp-separated range never divides 0/0 into NaN
-        use_d = F.col("lo_d") < F.col("hi_d")
-        comp = F.when(use_d, F.col("__kd")).otherwise(
-            F.col("__kh").cast("double")
-        )
-        clo = F.when(use_d, F.col("lo_d")).otherwise(
-            F.col("lo_h").cast("double")
-        )
-        chi = F.when(use_d, F.col("hi_d")).otherwise(
-            F.col("hi_h").cast("double")
-        )
-        width = F.greatest((chi - clo) / F.lit(4096.0), F.lit(4.9e-324))
-        bucket = F.least(
-            F.lit(4095),
-            F.greatest(F.lit(0), F.floor((comp - clo) / width)),
-        ).cast("int")
-        agg = cand.groupBy("__g", bucket.alias("__b")).agg(
-            F.count(F.lit(1)).alias("bn"),
-            F.min("__kd").alias("b_min_d"),
-            F.max("__kd").alias("b_max_d"),
-            F.min("__kh").alias("b_min_h"),
-            F.max("__kh").alias("b_max_h"),
-        )
-        w_cum = (
-            Window.partitionBy("__g")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        marked = agg.withColumn(
-            "before", F.coalesce(F.sum("bn").over(w_cum), F.lit(0))
-        ).join(
-            active.select(
-                "__g",
-                F.col("lo_d").alias("c_lo_d"),
-                F.col("lo_h").alias("c_lo_h"),
-                "quota",
-            ),
-            "__g",
-        )
-        # the EDGE bucket: first whose cumulative crosses the quota
-        # (always exists — the cell has n > quota)
-        w_edge = Window.partitionBy("__g").orderBy("__b")
-        edge = (
-            marked.filter(F.col("before") + F.col("bn") > F.col("quota"))
-            .withColumn("__rn", F.row_number().over(w_edge))
-            .filter(F.col("__rn") == 1)
+            .withColumn("quota", F.lit(int(k)).cast("long"))
             .localCheckpoint()
         )
-        # everything lex-below the edge bucket's first row is kept.
-        # Bucket ids are a monotone function of the split component, so
-        # the kept prefix is exactly {kd < b_min_d} for a score split
-        # and {kh < b_min_h at the tied score} for a hash split; when a
-        # score-split edge bucket happens to hold one score value the
-        # hash form is equivalent on actual rows (no row below its min).
-        was_tied = F.col("b_min_d") == F.col("b_max_d")
-        kept_descs.append(
-            edge.select(
-                "__g",
-                F.col("c_lo_d").alias("lo_d"),
-                F.col("c_lo_h").alias("lo_h"),
-                F.col("b_min_d").alias("ho_d"),
-                F.when(was_tied, F.col("b_min_h"))
-                .otherwise(F.lit(0).cast("long"))
-                .alias("ho_h"),
-            )
-        )
-        # recurse into the edge bucket only where quota remains; its
-        # closed interval is the bucket's ACTUAL min/max in each
-        # component (a bucket is value-contiguous by monotonicity)
-        cells = (
-            edge.filter(F.col("before") < F.col("quota"))
-            .select(
-                "__g",
-                F.col("b_min_d").alias("lo_d"),
-                F.col("b_max_d").alias("hi_d"),
-                F.when(was_tied, F.col("b_min_h"))
-                .otherwise(F.lit(0).cast("long"))
-                .alias("lo_h"),
-                F.when(was_tied, F.col("b_max_h"))
-                .otherwise(F.lit(_HASH_SPACE).cast("long"))
-                .alias("hi_h"),
-                F.col("bn").alias("n"),
-                (F.col("quota") - F.col("before")).alias("quota"),
-            )
-        )
 
-    finals = final_cells[0]
-    for part in final_cells[1:]:
-        finals = finals.unionByName(part)
-    kept = kept_descs[0]
-    for part in kept_descs[1:]:
-        kept = kept.unionByName(part)
-    if stats is not None:
-        fr = finals.agg(
-            F.count(F.lit(1)).alias("c"), F.max("n").alias("m")
-        ).collect()[0]
-        stats["rounds"] = rounds
-        stats["final_cells"] = fr["c"]
-        stats["final_rows_max"] = fr["m"]
+        def lex_within(lo_d, lo_h, hi_d, hi_h):
+            """(kd, kh) inside the CLOSED interval
+            [(lo_d,lo_h),(hi_d,hi_h)]."""
+            ge = (F.col("__kd") > F.col(lo_d)) | (
+                (F.col("__kd") == F.col(lo_d)) & (F.col("__kh") >= F.col(lo_h))
+            )
+            le = (F.col("__kd") < F.col(hi_d)) | (
+                (F.col("__kd") == F.col(hi_d)) & (F.col("__kh") <= F.col(hi_h))
+            )
+            return ge & le
 
-    # kept intervals: closed lo, OPEN hi
-    lex_ge_lo = (F.col("__kd") > F.col("lo_d")) | (
-        (F.col("__kd") == F.col("lo_d")) & (F.col("__kh") >= F.col("lo_h"))
-    )
-    lex_lt_open = (F.col("__kd") < F.col("ho_d")) | (
-        (F.col("__kd") == F.col("ho_d")) & (F.col("__kh") < F.col("ho_h"))
-    )
-    kept_rows = base.join(_bc(kept), "__g").filter(
-        lex_ge_lo & lex_lt_open
-    )
-    w_fin = Window.partitionBy("__g").orderBy("__kd", "__kh", id_col)
-    final_rows = (
-        base.join(_bc(finals), "__g")
-        .filter(lex_within("lo_d", "lo_h", "hi_d", "hi_h"))
-        .withColumn("__rn", F.row_number().over(w_fin))
-        .filter(F.col("__rn") <= F.col("quota"))
-    )
-    out = kept_rows.select(*df.columns).unionByName(
-        final_rows.select(*df.columns)
-    )
-    base.unpersist(blocking=False)
-    return out
+        kept_descs = []  # closed-lo / OPEN-hi fully-kept intervals
+        final_cells = []
+        rounds = 0
+        while True:
+            # groups whose whole contested cell fits the quota: keep it all
+            kept_descs.append(
+                cells.filter(F.col("n") <= F.col("quota")).select(
+                    "__g",
+                    "lo_d",
+                    "lo_h",
+                    F.col("hi_d").alias("ho_d"),
+                    (F.col("hi_h") + 1).alias("ho_h"),  # open hi past the max
+                )
+            )
+            contested = cells.filter(F.col("n") > F.col("quota"))
+            degenerate = (F.col("lo_d") == F.col("hi_d")) & (
+                F.col("lo_h") == F.col("hi_h")
+            )
+            finish = (
+                (F.col("n") <= F.lit(int(max_window_rows)))
+                | degenerate
+                | F.lit(rounds >= max_rounds)
+            )
+            final_cells.append(contested.filter(finish))
+            active = contested.filter(~finish)
+            if active.isEmpty():
+                break
+            rounds += 1
+            cand = base.join(_bc(active), "__g").filter(
+                lex_within("lo_d", "lo_h", "hi_d", "hi_h")
+            )
+            # split on the score while it has spread, else on the hash;
+            # floor width at the smallest positive double so an
+            # ulp-separated range never divides 0/0 into NaN
+            use_d = F.col("lo_d") < F.col("hi_d")
+            comp = F.when(use_d, F.col("__kd")).otherwise(
+                F.col("__kh").cast("double")
+            )
+            clo = F.when(use_d, F.col("lo_d")).otherwise(
+                F.col("lo_h").cast("double")
+            )
+            chi = F.when(use_d, F.col("hi_d")).otherwise(
+                F.col("hi_h").cast("double")
+            )
+            width = F.greatest((chi - clo) / F.lit(4096.0), F.lit(4.9e-324))
+            bucket = F.least(
+                F.lit(4095),
+                F.greatest(F.lit(0), F.floor((comp - clo) / width)),
+            ).cast("int")
+            agg = cand.groupBy("__g", bucket.alias("__b")).agg(
+                F.count(F.lit(1)).alias("bn"),
+                F.min("__kd").alias("b_min_d"),
+                F.max("__kd").alias("b_max_d"),
+                F.min("__kh").alias("b_min_h"),
+                F.max("__kh").alias("b_max_h"),
+            )
+            w_cum = (
+                Window.partitionBy("__g")
+                .orderBy("__b")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            )
+            marked = agg.withColumn(
+                "before", F.coalesce(F.sum("bn").over(w_cum), F.lit(0))
+            ).join(
+                active.select(
+                    "__g",
+                    F.col("lo_d").alias("c_lo_d"),
+                    F.col("lo_h").alias("c_lo_h"),
+                    "quota",
+                ),
+                "__g",
+            )
+            # the EDGE bucket: first whose cumulative crosses the quota
+            # (always exists — the cell has n > quota)
+            w_edge = Window.partitionBy("__g").orderBy("__b")
+            edge = (
+                marked.filter(F.col("before") + F.col("bn") > F.col("quota"))
+                .withColumn("__rn", F.row_number().over(w_edge))
+                .filter(F.col("__rn") == 1)
+                .localCheckpoint()
+            )
+            # everything lex-below the edge bucket's first row is kept.
+            # Bucket ids are a monotone function of the split component, so
+            # the kept prefix is exactly {kd < b_min_d} for a score split
+            # and {kh < b_min_h at the tied score} for a hash split; when a
+            # score-split edge bucket happens to hold one score value the
+            # hash form is equivalent on actual rows (no row below its min).
+            was_tied = F.col("b_min_d") == F.col("b_max_d")
+            kept_descs.append(
+                edge.select(
+                    "__g",
+                    F.col("c_lo_d").alias("lo_d"),
+                    F.col("c_lo_h").alias("lo_h"),
+                    F.col("b_min_d").alias("ho_d"),
+                    F.when(was_tied, F.col("b_min_h"))
+                    .otherwise(F.lit(0).cast("long"))
+                    .alias("ho_h"),
+                )
+            )
+            # recurse into the edge bucket only where quota remains; its
+            # closed interval is the bucket's ACTUAL min/max in each
+            # component (a bucket is value-contiguous by monotonicity)
+            cells = (
+                edge.filter(F.col("before") < F.col("quota"))
+                .select(
+                    "__g",
+                    F.col("b_min_d").alias("lo_d"),
+                    F.col("b_max_d").alias("hi_d"),
+                    F.when(was_tied, F.col("b_min_h"))
+                    .otherwise(F.lit(0).cast("long"))
+                    .alias("lo_h"),
+                    F.when(was_tied, F.col("b_max_h"))
+                    .otherwise(F.lit(_HASH_SPACE).cast("long"))
+                    .alias("hi_h"),
+                    F.col("bn").alias("n"),
+                    (F.col("quota") - F.col("before")).alias("quota"),
+                )
+            )
+
+        finals = final_cells[0]
+        for part in final_cells[1:]:
+            finals = finals.unionByName(part)
+        kept = kept_descs[0]
+        for part in kept_descs[1:]:
+            kept = kept.unionByName(part)
+        if stats is not None:
+            fr = finals.agg(
+                F.count(F.lit(1)).alias("c"), F.max("n").alias("m")
+            ).collect()[0]
+            stats["rounds"] = rounds
+            stats["final_cells"] = fr["c"]
+            stats["final_rows_max"] = fr["m"]
+
+        # kept intervals: closed lo, OPEN hi
+        lex_ge_lo = (F.col("__kd") > F.col("lo_d")) | (
+            (F.col("__kd") == F.col("lo_d")) & (F.col("__kh") >= F.col("lo_h"))
+        )
+        lex_lt_open = (F.col("__kd") < F.col("ho_d")) | (
+            (F.col("__kd") == F.col("ho_d")) & (F.col("__kh") < F.col("ho_h"))
+        )
+        kept_rows = base.join(_bc(kept), "__g").filter(
+            lex_ge_lo & lex_lt_open
+        )
+        w_fin = Window.partitionBy("__g").orderBy("__kd", "__kh", id_col)
+        final_rows = (
+            base.join(_bc(finals), "__g")
+            .filter(lex_within("lo_d", "lo_h", "hi_d", "hi_h"))
+            .withColumn("__rn", F.row_number().over(w_fin))
+            .filter(F.col("__rn") <= F.col("quota"))
+        )
+        out = kept_rows.select(*df.columns).unionByName(
+            final_rows.select(*df.columns)
+        )
+        return out
 
 
 def weighted_sample(

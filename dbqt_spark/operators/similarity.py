@@ -1091,48 +1091,16 @@ def _eager_capped_result(
     build_result,
     localize_limit: int | None = None,
 ) -> DataFrame:
-    """Run ``build_result(capped_banded)`` with the oversized-block guard.
-
-    Without ``max_block_size`` this is a pass-through (fully lazy, no
-    persist). With it, the banded frame feeds THREE consumers — the
-    block-size aggregate, the anti-join probe, and the main matmul — so
-    it is persisted for the duration and the result is materialized
-    EAGERLY before the banded blocks are released; unpersisted, the
-    banding ``pandas_udf`` pipeline would re-run ~3x per query (VERDICT
-    r5 #2: embedding_near_dups 3.4 -> 5.6 s). Drop counts land in
-    ``drop_stats`` (n_dropped_buckets / n_dropped_rows) when the caller
-    passes a dict.
-
-    With ``localize_limit`` (right for results bounded small by
-    construction, e.g. thresholded near-dup pairs) a result within the
-    limit is COLLECTED and rebuilt as a LocalRelation — zero cached
-    blocks survive the call (same shape as
-    ``dedup._eager_pairs_from_banded``). Otherwise — corpus-sized results
-    (``embedding_blocked_nn``) or an over-limit pair set — the RETURNED
-    frame is persisted and the caller releases it with ``.unpersist()``
-    (or ``operators.cache.released``)."""
-    from .dedup import _cap_buckets_eager
+    """``build_result(banded)`` — fully lazy without ``max_block_size``,
+    else through the shared cap -> build -> localize path
+    (``dedup._eager_capped``; ``localize_limit=None`` keeps the result)."""
+    from .dedup import _eager_capped
 
     if max_block_size is None:
         return build_result(banded)
-    banded = banded.persist()
-    # drop accounting rides the capping probe job (dedup's r6 ask #6
-    # restructure); the result plan anti-joins a LocalRelation of
-    # oversized keys — or nothing at all on the common zero-drop corpus
-    capped = _cap_buckets_eager(banded, keys, max_block_size, drop_stats)
-    # persist BEFORE the probe so the over-limit fallback's count()
-    # finishes from cache instead of re-executing the matmul (ADVICE r6)
-    result = build_result(capped).persist()
-    if localize_limit is not None:
-        rows = result.limit(localize_limit + 1).collect()
-        if len(rows) <= localize_limit:
-            schema = result.schema
-            result.unpersist()
-            banded.unpersist()
-            return banded.sparkSession.createDataFrame(rows, schema=schema)
-    result.count()
-    banded.unpersist()
-    return result
+    return _eager_capped(
+        banded, keys, max_block_size, drop_stats, build_result, localize_limit
+    )[0]
 
 
 def embedding_near_dup_pairs(
@@ -1169,10 +1137,8 @@ def embedding_near_dup_pairs(
     ``max_block_size`` drops oversized (key, band, bucket) blocks before
     the matmul (broadcast anti-join) as a last-resort quadratic guard;
     pass ``drop_stats`` to receive n_dropped_buckets / n_dropped_rows.
-    With the cap enabled the result is materialized EAGERLY: pair sets
-    within the broadcast limit come back as a LocalRelation (zero cached
-    blocks survive), bigger ones persisted (release with ``.unpersist()``
-    / ``operators.cache.released`` — see ``_eager_capped_result``);
+    With the cap enabled the result is materialized EAGERLY and follows
+    the ``operators.cache`` contract (limit ``BROADCAST_PAIR_LIMIT``);
     without the cap the plan stays fully lazy. ``bits_per_band=None``
     auto-derives the bucket width from the corpus size
     (``auto_bits_per_band``).
@@ -1258,12 +1224,13 @@ def embedding_blocked_nn(
 
     ``max_block_size`` / ``drop_stats`` are the same quadratic guard as
     ``embedding_near_dup_pairs`` — with the cap enabled the result is
-    eagerly materialized and returned persisted (see
-    ``_eager_capped_result``); members of a dropped block can still
-    find their NN through their other ``bands - 1`` buckets; a vector
-    dropped from ALL its blocks yields no NN row — the drop counts make
-    that observable. ``bits_per_band=None`` auto-derives the bucket
-    width from the corpus size."""
+    corpus-sized, so it is eagerly materialized and always returned
+    persisted for the caller to release (``operators.cache``). Members
+    of a dropped block can still find their NN through their other
+    ``bands - 1`` buckets; a vector dropped from ALL its blocks yields
+    no NN row — the drop counts make that observable.
+    ``bits_per_band=None`` auto-derives the bucket width from the corpus
+    size."""
     key_cols = list(key_cols or [])
     bits_per_band = _resolve_bits(df, bits_per_band)
     banded = _banded_rows(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .catalog import TPCH_TABLES, discover_tables, load_table, load_tables
 from .utils import spread_small_scan
+from .operators.cache import localize_or_keep, released
 from .operators.dedup import (
     minhash_near_duplicates,
     ngram_jaccard_near_duplicates,
@@ -80,24 +81,17 @@ def _ensure_utc(spark: SparkSession) -> None:
     ensure_utc(spark)
 
 
-def _localized(df: DataFrame) -> DataFrame:
-    """Release a persisted operator result by pulling it through the
-    driver: collect, unpersist, rebuild as a LocalRelation.
+# harness results are bounded at <= 1 row per doc/vector — far below this
+_HARNESS_LOCAL_ROWS = 10_000_000
 
-    The near-dup / blocked-NN operators return PERSISTED frames on some
-    paths (corpus-sized NN output; over-limit pair sets) with a caller
-    release contract — but these harness queries hand their frame to the
-    driver, which collects and never unpersists, and wrapping a derived
-    ``.select``/``.orderBy`` frame makes ``unpersist()`` a no-op on the
-    cache underneath. Results at harness scale are bounded (<=1 row per
-    doc/vector), so localizing is safe here; production callers use the
-    operators directly with ``operators.cache.released``. Lazy frames
-    pass through untouched."""
-    if not df.is_cached:
-        return df
-    rows = df.collect()
-    df.unpersist()
-    return df.sparkSession.createDataFrame(rows, schema=df.schema)
+
+def _localized(df: DataFrame) -> DataFrame:
+    """Take over a KEPT operator result (the ``operators.cache``
+    caller-release path: corpus-sized NN output, over-limit pair sets):
+    these harness queries hand their frame to a driver that collects and
+    never unpersists, so it is pulled through the driver and released
+    here. Lazy and already-local frames pass through untouched."""
+    return localize_or_keep(df, _HARNESS_LOCAL_ROWS)[0] if df.is_cached else df
 
 
 def _union_all(parts: list[DataFrame]) -> DataFrame:
@@ -3726,10 +3720,12 @@ def q_cross_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_cross_near_duplicates
 
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_cross_near_duplicates(
-        docs.filter(F.col("doc_id") % 2 == 1),
-        docs.filter(F.col("doc_id") % 2 == 0),
-        threshold=0.5,
+    return _localized(
+        minhash_cross_near_duplicates(
+            docs.filter(F.col("doc_id") % 2 == 1),
+            docs.filter(F.col("doc_id") % 2 == 0),
+            threshold=0.5,
+        )
     ).orderBy("query_id", "corpus_id")
 
 
@@ -3750,8 +3746,8 @@ def q_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < FIRST_WINS_MAX_DOC
     )
     pairs = minhash_near_duplicates(docs, threshold=0.5)
-    dropped = first_wins_dropped(pairs).withColumnRenamed("id", "doc_id")
-    pairs.unpersist()  # no-op unless dedup returned it persisted
+    with released(pairs):
+        dropped = first_wins_dropped(pairs).withColumnRenamed("id", "doc_id")
     return (
         docs.select("doc_id")
         .join(dropped, "doc_id", "left_anti")
@@ -4086,11 +4082,13 @@ def q_cross_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         minhash_index_write(corpus.filter(F.col("doc_id") % 4 == 0), path)
         minhash_index_append(corpus.filter(F.col("doc_id") % 4 == 2), path)
-        return minhash_index_query(
-            docs.filter(F.col("doc_id") % 2 == 1),
-            path,
-            threshold=0.5,
-            corpus=corpus,
+        return _localized(
+            minhash_index_query(
+                docs.filter(F.col("doc_id") % 2 == 1),
+                path,
+                threshold=0.5,
+                corpus=corpus,
+            )
         ).orderBy("query_id", "corpus_id")
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -4606,10 +4604,9 @@ def q_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import pair_source_matrix, simhash_near_duplicates
 
     docs = load_table(spark, sf_dir, "documents")
-    # _localized: the tier returns a PERSISTED frame on the over-limit
-    # path with a caller-release contract — the harness never
-    # unpersists, so pull the bounded pair set through the driver
-    # (the q_simhash_near_dups precedent)
+    # _localized: the harness never releases a kept (over-limit) pair
+    # set, so it is pulled through the driver (the
+    # q_simhash_near_dups precedent)
     pairs = _localized(
         simhash_near_duplicates(docs, max_hamming=3, portable=True)
     )
@@ -4996,8 +4993,10 @@ def q_edit_distance_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     titles = docs.select(
         "doc_id", F.expr("substring(text, 1, 12)").alias("title")
     )
-    return edit_distance_near_duplicates(
-        titles, text_col="title", max_distance=2
+    return _localized(
+        edit_distance_near_duplicates(
+            titles, text_col="title", max_distance=2
+        )
     ).orderBy("id_a", "id_b")
 
 

@@ -46,3 +46,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def no_new_pinned_rdds(spark):
+    """Opt-in leak guard: the test fails if it leaves persistent RDDs
+    (cached frames or checkpoints) behind that were not there before.
+
+    Yields ``new_pinned()`` — how many of the persistent RDDs present
+    now are new — for mid-test checks such as "an over-limit result
+    holds exactly one". RDD ids, not just the count, are compared, so
+    an unrelated earlier leak being collected meanwhile cannot mask a
+    new one. A test whose path keeps iterative lineage cuts
+    (``localCheckpoint`` rounds) pinned sets
+    ``new_pinned.ignore_checkpoints = True`` to guard its cached frames
+    only."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def new_pinned() -> int:
+        rdds = jsc.getPersistentRDDs()
+        return sum(
+            1
+            for i in rdds.keySet()
+            if i not in before
+            and not (
+                new_pinned.ignore_checkpoints
+                and rdds.get(i).isCheckpointed()
+            )
+        )
+
+    new_pinned.ignore_checkpoints = False
+    yield new_pinned
+    assert new_pinned() == 0, "the test left persistent RDDs pinned"

@@ -520,7 +520,8 @@ def test_minhash_bucket_cap_drops_hot_bucket(spark):
     assert pairs == {(10_000, 10_001)}
 
     # sub-quadratic: without the cap the candidate join would emit
-    # 2000*1999/2 pairs per band; with it, only the planted pair survives
+    # n_hot*(n_hot-1)/2 (300*299/2) pairs per band; with it, only the
+    # planted pair survives
     sigs = minhash_signatures(df)
     n_cand = minhash_candidate_pairs(sigs, max_bucket_size=100).count()
     assert n_cand == 1
@@ -597,14 +598,17 @@ def test_minhash_band_width_validation():
         minhash_band_hashes("text", num_hashes=33, bands=16)
 
 
-def test_near_dup_cache_contract(spark):
+def test_near_dup_cache_contract(spark, no_new_pinned_rdds):
     """On the common path (candidate set within BROADCAST_PAIR_LIMIT) the
-    minhash/simhash near-dup calls leave ZERO cached blocks behind — the
+    near-dup tiers leave ZERO cached blocks or pinned RDDs behind — the
     candidate set localizes — and `released` stays a safe no-op wrapper
     (VERDICT r5 ask #8: no cached blocks outlive the contract)."""
     from dbqt_spark.operators.cache import released
     from dbqt_spark.operators.dedup import (
+        edit_distance_near_duplicates,
+        minhash_cross_near_duplicates,
         minhash_near_duplicates,
+        ngram_jaccard_near_duplicates,
         simhash_near_duplicates,
     )
 
@@ -625,28 +629,43 @@ def test_near_dup_cache_contract(spark):
     for op in (
         lambda d: minhash_near_duplicates(d, threshold=0.5),
         lambda d: simhash_near_duplicates(d, max_hamming=6, bands=8),
+        lambda d: ngram_jaccard_near_duplicates(d, threshold=0.5),
+        lambda d: minhash_cross_near_duplicates(d, d, threshold=0.5),
+        lambda d: edit_distance_near_duplicates(
+            d.withColumn("text", d["text"].substr(1, 10)), max_len=10
+        ),
     ):
         before = cached_ids()
         out = op(df)
         assert cached_ids() - before == set()  # nothing left cached
+        assert no_new_pinned_rdds() == 0
         with released(out) as out:
             assert out.count() >= 1
         assert cached_ids() - before == set()
 
 
-def test_near_dup_localize_fallback_persists(spark):
+def test_near_dup_localize_fallback_persists(spark, no_new_pinned_rdds):
     """When the candidate set exceeds BROADCAST_PAIR_LIMIT the pair frame
-    stays cluster-side (persisted) and the caller releases it."""
+    stays cluster-side (persisted) — the ONLY thing left pinned — and
+    the caller releases it."""
     from dbqt_spark.operators import dedup as dd
+    from dbqt_spark.operators.cache import released
 
     rows = [(i, f"tok{i % 3} common words here shared") for i in range(40)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     orig = dd.BROADCAST_PAIR_LIMIT
     dd.BROADCAST_PAIR_LIMIT = 5  # force the fallback on a tiny corpus
     try:
-        out = dd.simhash_near_duplicates(df, max_hamming=6, bands=8)
-        assert out.is_cached
-        out.unpersist()
+        for op in (
+            lambda: dd.simhash_near_duplicates(df, max_hamming=6, bands=8),
+            lambda: dd.ngram_jaccard_near_duplicates(df, threshold=0.5),
+        ):
+            out = op()
+            assert out.is_cached
+            assert no_new_pinned_rdds() == 1
+            with released(out):
+                assert out.count() > 5
+            assert no_new_pinned_rdds() == 0
     finally:
         dd.BROADCAST_PAIR_LIMIT = orig
 

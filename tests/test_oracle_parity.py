@@ -32,7 +32,7 @@ PARITY_SMOKE = [
     "event_funnel",
     "repetition_stats",
     "minhash_near_dups",
-    "ivf_topk",
+    "ivf_full_probe",
     "streaming_dedup",
     "incremental_profile",
     "wat_metadata",
@@ -42,6 +42,8 @@ PARITY_SMOKE = [
     "pagerank_dangling",
     "cdx_dedup",
 ]
+# a smoke entry without an oracle would silently run nothing
+assert set(PARITY_SMOKE) <= set(ORACLE_NAMES)
 
 
 def _tiered(names):

@@ -603,8 +603,14 @@ def test_near_dup_clusters_representatives(spark):
     assert rows[2]["is_representative"] is False
 
 
-def test_connected_components_localized_equals_distributed(spark):
+def test_connected_components_localized_equals_distributed(
+    spark, no_new_pinned_rdds
+):
     from dbqt_spark.operators.clusters import connected_components
+
+    # the ids-only probe cache is released on both paths; the
+    # distributed rounds' lineage cuts are checkpoints
+    no_new_pinned_rdds.ignore_checkpoints = True
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],

@@ -278,7 +278,9 @@ def _cached_rdd_ids(spark):
     }
 
 
-def test_embedding_cap_localizes_result_releases_banded(spark):
+def test_embedding_cap_localizes_result_releases_banded(
+    spark, no_new_pinned_rdds
+):
     """With max_block_size set the operator materializes eagerly: the
     (small) pair set localizes, drop_stats is already filled (no action
     needed), and NO cached blocks survive the call — the r5 regression
@@ -297,13 +299,14 @@ def test_embedding_cap_localizes_result_releases_banded(spark):
     # eager: stats available before any caller action; nothing cached
     assert stats == {"n_dropped_buckets": 0, "n_dropped_rows": 0}
     assert _cached_rdd_ids(spark) - before == set()
+    assert no_new_pinned_rdds() == 0
     with released(pairs) as pairs:
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert _cached_rdd_ids(spark) - before == set()
     assert got == {(a, b) for a, b, _ in _brute_pairs(M, 0.8)}
 
 
-def test_embedding_nn_cap_persists_result(spark):
+def test_embedding_nn_cap_persists_result(spark, no_new_pinned_rdds):
     """embedding_blocked_nn's result is corpus-sized (one row per
     vector), so the cap path returns it persisted with the banded
     intermediate released — the caller frees it via released()."""
@@ -318,6 +321,7 @@ def test_embedding_nn_cap_persists_result(spark):
     )
     assert nn.is_cached
     assert len(_cached_rdd_ids(spark) - before) == 1
+    assert no_new_pinned_rdds() == 1
     with released(nn) as nn:
         assert nn.count() == 40
     assert _cached_rdd_ids(spark) - before == set()
@@ -356,10 +360,12 @@ def test_ivf_build_empty_and_tiny_input(spark):
     assert assigned.count() == 2
 
 
-def test_embedding_localize_fallback_persists(spark):
+def test_embedding_localize_fallback_persists(spark, no_new_pinned_rdds):
     """Pair sets beyond the broadcast limit stay cluster-side: the
-    returned frame is persisted and the caller releases it."""
+    returned frame is persisted — the only thing left pinned — and the
+    caller releases it."""
     from dbqt_spark.operators import dedup as dd
+    from dbqt_spark.operators.cache import released
     from dbqt_spark.operators.similarity import embedding_near_dup_pairs
 
     df, _ = _hot_label_df(spark, n=30)
@@ -371,8 +377,9 @@ def test_embedding_localize_fallback_persists(spark):
             max_block_size=10_000,
         )
         assert pairs.is_cached
-        assert pairs.count() > 1
-        pairs.unpersist()
+        assert no_new_pinned_rdds() == 1
+        with released(pairs):
+            assert pairs.count() > 1
     finally:
         dd.BROADCAST_PAIR_LIMIT = orig
 

@@ -232,15 +232,20 @@ def test_neardup_gate_retry_and_param_guard(spark, tmp_path):
         minhash_gate_batch(batch, store, bands=32)
 
 
-def test_neardup_gate_adversarial_batch_both_paths(spark, tmp_path):
+def test_neardup_gate_adversarial_batch_both_paths(
+    spark, tmp_path, no_new_pinned_rdds
+):
     """An adversarial all-near-dup batch (every doc pairs with every
     other) must NOT abort and must NOT silently pull O(batch^2) pairs
     to the driver: past ``driver_pair_limit`` the gate switches to the
     distributed first-wins wavefront, whose survivors are identical to
     the driver greedy's. Both paths run the same batch here — including
     a SECOND batch so the distributed path also exercises the
-    cross-store rejection arm."""
+    cross-store rejection arm. Neither path leaves a cached frame
+    behind (the wavefront's per-round lineage cuts are checkpoints)."""
     from dbqt_spark.streaming.neardup import minhash_gate_batch
+
+    no_new_pinned_rdds.ignore_checkpoints = True
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
     # 6 near-identical docs -> C(6,2)=15 verified within-batch pairs
